@@ -53,6 +53,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from automated_datastore_discovery_with_aws_glue_spark.operators.cache import own
 from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import (
     _lit_imatrix_sql,
     adc_from_lut_expr,
@@ -203,8 +204,11 @@ class IvfVectorIndex:
         hit = self._quantizer_cache.get(("cent", key))
         if hit is not None:
             return hit
+        # read the version the memo is keyed by: None would re-resolve
+        # latest, and a rebuild committing in between would file the
+        # newer matrix under the older key
         rows = (
-            self.store.read(CENTROIDS, version=qv).orderBy("cell", "pos").collect()
+            self.store.read(CENTROIDS, version=key).orderBy("cell", "pos").collect()
         )
         cents: dict[int, dict[int, int]] = {}
         for r in rows:
@@ -236,7 +240,7 @@ class IvfVectorIndex:
         hit = self._quantizer_cache.get(("book", key))
         if hit is not None:
             return hit
-        rows = self.store.read(CODEBOOKS, version=qv).collect()
+        rows = self.store.read(CODEBOOKS, version=key).collect()
         acc: dict[int, dict[int, dict[int, int]]] = {}
         for r in rows:
             acc.setdefault(r["j"], {}).setdefault(r["cell"], {})[r["pos"]] = r["c"]
@@ -942,6 +946,7 @@ class IvfVectorIndex:
         cand = self._probed_candidates(
             cells or [-1], with_codes=with_codes, version=version
         )
+        own(qbase)  # every caller's result reads it
         return qbase, qdf, cand
 
     def topk_batch(
@@ -983,8 +988,6 @@ class IvfVectorIndex:
         the per-call distinct-collect action whenever the batch would
         saturate the cell set anyway."""
         from pyspark.sql import Window
-
-        from automated_datastore_discovery_with_aws_glue_spark.operators import cache as C
 
         v = self._read_snapshot_version()
         if mode == "adc":
@@ -1042,7 +1045,7 @@ class IvfVectorIndex:
                 )
                 .orderBy(query_id_col, "rnk")
             )
-            return C.adopt(out, qbase)
+            return out
         if mode != "exact":
             raise ValueError(f"topk_batch: unknown mode {mode!r} (exact | adc)")
         qbase, qdf, cand = self._probe_join(
@@ -1074,7 +1077,7 @@ class IvfVectorIndex:
             )
             .orderBy(query_id_col, "rnk")
         )
-        return C.adopt(out, qbase)
+        return out
 
     def similarity_join(
         self,
@@ -1103,8 +1106,6 @@ class IvfVectorIndex:
         consumers (threshold filters, cluster builders) don't need it.
         The oracle twin passes ``ordered=True`` to keep its
         deterministic replay order."""
-        from automated_datastore_discovery_with_aws_glue_spark.operators import cache as C
-
         qbase, qdf, cand = self._probe_join(
             incoming,
             n_probe=n_probe,
@@ -1133,7 +1134,7 @@ class IvfVectorIndex:
         )
         if ordered:
             out = out.orderBy(query_id_col, self.id_col, "cell")
-        return C.adopt(out, qbase)
+        return out
 
     def topk(
         self,

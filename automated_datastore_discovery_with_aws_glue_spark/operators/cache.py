@@ -1,185 +1,174 @@
-"""Deterministic lifecycle for operator-internal persisted frames.
+"""Reference-counted lifetime for operator-internal caches and checkpoints.
 
 Several operators persist a shared intermediate frame (the hashed-shingle
-index, the LSH bucket frame, the normed-vector frame) because it feeds
-two or three branches of one plan. The persist must stay alive until the
-*caller* runs its action on the returned DataFrame — an event the
-operator never observes — so in a long-lived session the caches used to
-accumulate until they evicted each other (bench.py worked around it with
-``spark.catalog.clearCache()`` between queries).
+index, the LSH bucket frame, the normed-vector frame) or localCheckpoint
+one (label rounds, rank rounds) because it feeds several branches of the
+plan they return. The cache must stay alive until the *caller* runs its
+last action on that plan — an event the operator never observes.
 
-Ownership is now attached to the returned frame itself:
+One registry owns them all, keyed by what the plan itself exposes:
 
-- ``adopt(result, *cached)`` ties each cached frame's lifetime to
-  ``result``: :func:`release` unpersists them deterministically, and a
-  ``weakref.finalize`` backstop unpersists when the result is
-  garbage-collected — so even a caller that never heard of this module
-  leaks nothing beyond the result's own lifetime.
-- ``release(df)`` — call after the last action on ``df``; idempotent,
-  no-op on frames with nothing adopted. Results whose plan was
-  lineage-truncated (``dedup_clusters``'s checkpoints) are NOT
-  re-computable after release — release means "done with this frame".
-- ``cache_scope()`` — context manager that takes ownership instead:
-  every cache adopted inside the ``with`` block is unpersisted on exit
-  (run your actions inside the block).
+- a cache is an ``InMemoryRelation`` leaf of the cache-substituted plan,
+  keyed by the id of its builder's size accumulator, unique per cache
+  (the persisted RDD only exists once the first action builds it, and
+  asking for it earlier would run the cached plan);
+- a checkpoint is a ``LogicalRDD`` leaf, keyed by its RDD id.
 
-Everything funnels through ``try/except`` on the JVM call: at
-interpreter shutdown or after ``spark.stop()`` the gateway may already
-be gone, and a cleanup path must never raise.
+``own(*frames)`` — called by an operator on the frames it persisted or
+checkpointed and whose data its result reads — adds one reference per
+distinct key. Spark's CacheManager shares one cache between every frame
+with the same plan, so a second operator run over the same input adds a
+reference to the same entry instead of a second owner that could free it.
+
+The contract for callers is one rule: **release the frame you were
+given, once, after its last action.** ``release(df)`` drops one reference
+for every registered key among the leaves of ``df``'s plan (and of the
+registered caches those leaves are built from), and unpersists each
+entry that reaches zero. A frame derived from an operator result (a
+``filter``, ``orderBy``, join) reads the same leaves, so releasing the
+derived frame frees its parents' caches — no hand-over is needed, and
+the parent must not be released as well. Keys that were never
+registered are ignored: a caller's own caches, or checkpoint blocks that
+the JVM ContextCleaner frees with their frame. A frame whose plan reads
+a checkpoint cannot recompute after release — release means "done".
+
+Nothing frees an unreleased result: its caches live until the session
+ends. Cleanup swallows JVM errors — at interpreter shutdown or after
+``spark.stop()`` the gateway may already be gone, and a cleanup path
+must never raise.
 """
 
 from __future__ import annotations
 
 import threading
-import weakref
-from contextlib import contextmanager
-from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame
 
-_ATTR = "_graft_cache_handle"
+_RELEASED = "_cache_released"
+
+_lock = threading.Lock()
+# key -> [references, owning frame, checkpoint RDD (None for a cache)];
+# insertion order is own order, so a cache is registered after the
+# caches it is built from
+_entries: dict[tuple, list] = {}
 
 
-class _ScopeStack(threading.local):
-    """Per-THREAD stack of active cache_scope frames (innermost last;
-    each is a list of release callables). Thread-local so a scope opened
-    in one query thread can never adopt — and later unpersist — caches
-    an operator is building concurrently in another thread."""
-
-    def __init__(self):
-        self.frames: list[list[Callable[[], None]]] = []
+def _leaves(jplan) -> list:
+    seq = jplan.collectLeaves()
+    return [seq.apply(i) for i in range(seq.size())]
 
 
-_scope_stack = _ScopeStack()
+def _key(leaf, ctx: int) -> tuple | None:
+    # RDD ids restart with each SparkContext: ``ctx`` keeps an entry left
+    # over from a stopped context from matching a new context's RDD
+    name = leaf.nodeName()
+    if name == "InMemoryRelation":
+        return (ctx, "cache", leaf.cacheBuilder().sizeInBytesStats().id())
+    if name == "LogicalRDD":
+        return (ctx, "rdd", leaf.rdd().id())
+    return None
 
 
-def _unpersister(df: DataFrame) -> Callable[[], None]:
-    jdf = df  # the closure keeps the py4j handle alive until released
-    done = [False]
-
-    def _do() -> None:
-        if done[0]:
-            return
-        done[0] = True
-        try:
-            jdf.unpersist()
-        except Exception:  # gateway already down — nothing left to free
-            pass
-
-    return _do
+def _cache_manager(df: DataFrame):
+    return df.sparkSession._jsparkSession.sharedState().cacheManager()
 
 
-def adopt(result: DataFrame, *cached) -> DataFrame:
-    """Tie the lifetime of ``cached`` (DataFrames previously
-    ``.persist()``-ed, or zero-arg release callables) to ``result``.
+def _ctx(df: DataFrame) -> int:
+    return id(df.sparkSession.sparkContext)
 
-    Inside an active :func:`cache_scope` the scope takes ownership (the
-    caches die at scope exit). Otherwise the caches are released by
-    :func:`release`, or — the backstop — when ``result`` is
-    garbage-collected."""
-    releasers = [
-        c if callable(c) else _unpersister(c)  # type: ignore[arg-type]
-        for c in cached
+
+def _owned_keys(df: DataFrame) -> list[tuple]:
+    """(key, checkpoint RDD) pairs for a frame an operator persisted
+    (its cache, found through the CacheManager even when the frame's own
+    plan was analyzed before the persist) or checkpointed (the RDD
+    leaves of its plan)."""
+    ctx = _ctx(df)
+    cached = _cache_manager(df).lookupCachedData(df._jdf)
+    if cached.isDefined():
+        return [(_key(cached.get().cachedRepresentation(), ctx), None)]
+    return [
+        (key, leaf.rdd())
+        for leaf in _leaves(df._jdf.queryExecution().withCachedData())
+        if (key := _key(leaf, ctx)) is not None and key[1] == "rdd"
     ]
-    if not releasers:
-        return result
-    if _scope_stack.frames:
-        _scope_stack.frames[-1].extend(releasers)
-        return result
-    existing = getattr(result, _ATTR, None)
-    if existing is not None:
-        # stacked adopts on one frame (composed operators) merge
-        existing.releasers.extend(releasers)
-        return result
-    handle = _Handle(releasers)
-    setattr(result, _ATTR, handle)
-    # the finalizer must not reference `result` (it would never die);
-    # it references only the handle, which holds the cached frames.
-    handle.finalizer = weakref.finalize(result, _Handle.release, handle)
-    return result
 
 
-class _Handle:
-    __slots__ = ("releasers", "finalizer", "__weakref__")
+def own(*frames: DataFrame) -> None:
+    """Register one reference to the cache or checkpoint behind each of
+    ``frames`` (frames sharing a cache count once per call). Call it
+    for every persisted or checkpointed frame the returned plan reads,
+    after any internal unpersist, right before returning."""
+    found: dict[tuple, tuple] = {}
+    for df in frames:
+        for key, rdd in _owned_keys(df):
+            found.setdefault(key, (df, rdd))
+    with _lock:
+        for key, (df, rdd) in found.items():
+            entry = _entries.get(key)
+            if entry is None:
+                _entries[key] = [1, df, rdd]
+            else:
+                entry[0] += 1
 
-    def __init__(self, releasers: list[Callable[[], None]]):
-        self.releasers = releasers
-        self.finalizer = None
 
-    def release(self) -> None:
-        rs, self.releasers = self.releasers, []
-        for r in rs:
+def _reads(df: DataFrame) -> set[tuple]:
+    """Keys of everything ``df``'s plan reads: its cache and checkpoint
+    leaves, plus — through each registered cache — the leaves that
+    cache is built from (a cache hides its inputs from the plans that
+    read it)."""
+    cm, ctx = _cache_manager(df), _ctx(df)
+    todo = _leaves(df._jdf.queryExecution().withCachedData())
+    keys: set[tuple] = set()
+    while todo:
+        key = _key(todo.pop(), ctx)
+        if key is None or key in keys:
+            continue
+        keys.add(key)
+        entry = _entries.get(key)
+        if key[1] == "cache" and entry is not None:
+            children = entry[1]._jdf.queryExecution().analyzed().children()
+            for i in range(children.size()):
+                todo += _leaves(cm.useCachedData(children.apply(i)))
+    return keys
+
+
+def _drop(df: DataFrame, keep: DataFrame | None = None) -> None:
+    with _lock:
+        if df.__dict__.get(_RELEASED):
+            return
+        df.__dict__[_RELEASED] = True
+    try:
+        keys = _reads(df) - (_reads(keep) if keep is not None else set())
+    except Exception:  # gateway already down — nothing left to free
+        return
+    with _lock:
+        dead = []
+        for key in [k for k in _entries if k in keys]:
+            entry = _entries[key]
+            entry[0] -= 1
+            if entry[0] == 0:
+                dead.append(_entries.pop(key))
+        # newest first: a cache is freed before the caches it reads
+        for _, frame, rdd in reversed(dead):
             try:
-                r()
+                if rdd is None:
+                    frame.unpersist()
+                else:
+                    rdd.unpersist(False)
             except Exception:
                 pass
-        if self.finalizer is not None:
-            self.finalizer.detach()
-            self.finalizer = None
 
 
 def release(df: DataFrame) -> None:
-    """Deterministically free every cache adopted onto ``df``. Call after
-    the last action; idempotent; no-op for frames with nothing adopted."""
-    handle = getattr(df, _ATTR, None)
-    if handle is not None:
-        handle.release()
+    """Drop one reference to every registered cache and checkpoint
+    ``df``'s plan reads; unpersist those that reach zero. Call once,
+    after the last action on ``df``; idempotent per frame object."""
+    _drop(df)
 
 
-def carry(result: DataFrame, *parents: DataFrame) -> DataFrame:
-    """Transfer cache ownership across a composition boundary: when an
-    operator derives ``result`` from another operator's ``parent`` frame
-    (``parent.filter(...)``, a join, ...), the parent's adopted caches —
-    possibly lineage-truncated checkpoint blocks the derived plan still
-    reads — must live exactly as long as ``result``. ``carry`` keeps each
-    parent alive and releases it when ``result`` is released/collected by
-    the GC backstop. Without this, the parent's finalizer would free
-    blocks the derived frame still needs."""
-    return adopt(result, *[(lambda p=p: release(p)) for p in parents])
-
-
-def persistent_rdd_ids(sc) -> set[int]:
-    """Ids of every currently persisted RDD (includes localCheckpoint
-    blocks, which ``spark.catalog.clearCache`` does NOT touch)."""
-    try:
-        return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-    except Exception:
-        return set()
-
-
-def rdd_id_releaser(sc, ids: set[int]) -> Callable[[], None]:
-    """Release callable that unpersists the given RDD ids — the cleanup
-    handle for ``localCheckpoint`` blocks, whose internal RDD is not
-    reachable from the public DataFrame API. Pair with
-    :func:`persistent_rdd_ids` diffs around the checkpoint call."""
-
-    def _do() -> None:
-        try:
-            m = sc._jsc.getPersistentRDDs()
-            for i in ids:
-                r = m.get(i)
-                if r is not None:
-                    r.unpersist(False)
-        except Exception:
-            pass
-
-    return _do
-
-
-@contextmanager
-def cache_scope() -> Iterator[None]:
-    """Own every operator-internal cache created inside the block and
-    unpersist them all on exit. Run the actions that consume the
-    operators' results INSIDE the block — after exit, plans recompute
-    (or, for lineage-truncated cluster results, fail)."""
-    frame: list[Callable[[], None]] = []
-    _scope_stack.frames.append(frame)
-    try:
-        yield
-    finally:
-        _scope_stack.frames.pop()
-        for r in frame:
-            try:
-                r()
-            except Exception:
-                pass
+def release_except(df: DataFrame, keep: DataFrame | None) -> None:
+    """:func:`release` ``df``, sparing what ``keep``'s plan reads — for
+    an operator that has fully consumed an input (``dedup_clusters``'s
+    pairs) and returns a frame that still reads part of the same
+    caches (the caller's documents)."""
+    _drop(df, keep)

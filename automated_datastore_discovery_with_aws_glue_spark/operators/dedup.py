@@ -21,11 +21,9 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from automated_datastore_discovery_with_aws_glue_spark.operators.cache import (
-    adopt,
-    carry,
-    persistent_rdd_ids,
-    rdd_id_releaser,
+    own,
     release,
+    release_except,
 )
 from automated_datastore_discovery_with_aws_glue_spark.operators.hot import (
     HOT_POLICIES,
@@ -174,7 +172,8 @@ def jaccard_pairs(
         )
         .distinct()
     )
-    return adopt(result, base)
+    own(base)
+    return result
 
 
 # ---------------------------------------------------------------------------
@@ -366,7 +365,8 @@ def minhash_lsh_pairs(
         .filter(inter * 10000 >= F.lit(num) * union)
         .select("id_a", "id_b", F.round(inter.cast("double") / union, 4).alias("jaccard"))
     )
-    return adopt(result, *cached)
+    own(*cached)
+    return result
 
 
 def minhash_lsh_pairs_md5(
@@ -461,7 +461,8 @@ def minhash_lsh_pairs_md5(
         .filter(inter * 10000 >= F.lit(num) * union)
         .select("id_a", "id_b", F.round(inter.cast("double") / union, 4).alias("jaccard"))
     )
-    return adopt(result, *cached)
+    own(*cached)
+    return result
 
 
 # ---------------------------------------------------------------------------
@@ -620,7 +621,8 @@ def simhash_pairs(
         .select("id_a", "id_b", "hamming")
         .distinct()
     )
-    return adopt(result, *cached)
+    own(*cached)
+    return result
 
 
 def decontaminate(
@@ -903,7 +905,6 @@ def _clusters_driver_unionfind(
     all_ids: DataFrame | None,
     *,
     id_a: str,
-    consume_pairs: bool,
 ) -> DataFrame:
     """Bounded small-graph path of :func:`dedup_clusters`: exact
     union-find over the collected edge set (path-halving + min-root
@@ -913,8 +914,6 @@ def _clusters_driver_unionfind(
     the collect is bounded by construction."""
     rows = edges.collect()
     edges.unpersist()
-    if consume_pairs:
-        release(pairs)
     parent: dict = {}
 
     def find(x):
@@ -952,7 +951,6 @@ def dedup_clusters(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_rounds: int = 20,
-    consume_pairs: bool = True,
     driver_max_pairs: int | None = 200_000,
 ) -> DataFrame:
     """Connected components over near-dup pairs — the step that turns
@@ -992,22 +990,15 @@ def dedup_clusters(
     ``max_rounds`` — exiting silently there would return *wrong* cluster
     ids for any component whose diameter exceeds the bound.
 
-    Cache lifecycle: each round's checkpoint blocks are unpersisted as
-    soon as the next round materializes (the superseded round's blocks
-    serve no plan); the FINAL round's blocks back the returned frame and
-    are adopted onto it — freed by ``cache.release(result)`` or when the
-    result is garbage-collected. Because the returned plan reads
-    lineage-TRUNCATED checkpoint blocks, any frame derived from it must
-    keep the result alive via ``cache.carry(derived, result)`` — after a
-    release (explicit or GC-backstop) a derived plan cannot recompute.
-    With ``consume_pairs=True`` (default), the ``pairs`` frame is fully
-    consumed here (the label loop is eager) and its operator caches are
-    released on exit — re-collecting a ``jaccard_pairs`` result after
-    passing it in recomputes (correct, uncached). Pass
-    ``consume_pairs=False`` to keep reusing the pairs frame afterward
-    (release it yourself via ``cache.release(pairs)``).
+    Cache lifecycle (``operators/cache.py``): ``pairs`` is consumed —
+    the label computation is eager, so its caches are released here,
+    except those the result still reads through ``all_ids``; do not
+    release ``pairs`` yourself, and re-collecting it afterwards
+    recomputes (correct, uncached). Each round's checkpoint is released
+    as soon as the next round has materialized. Release the result once
+    after its last action: it reads the final round's checkpoint, so
+    it cannot recompute afterwards.
     """
-    sc = pairs.sparkSession.sparkContext
     # both edge directions come out of ONE evaluation of the pair
     # subtree (explode of a 2-struct array): the former
     # e.union(e.reversed) planned the — typically expensive, rarely
@@ -1029,21 +1020,19 @@ def dedup_clusters(
     # the count materializes the persisted edge set either way; on the
     # small side it also licenses the bounded driver collect
     if driver_max_pairs is not None and edges.count() <= 2 * driver_max_pairs:
-        result = _clusters_driver_unionfind(
-            pairs, edges, all_ids, id_a=id_a, consume_pairs=consume_pairs
-        )
+        result = _clusters_driver_unionfind(pairs, edges, all_ids, id_a=id_a)
+        release_except(pairs, result)
         return result
     # init = the first propagation round fused into a groupBy (labels are
     # the identity at round 0, so min-over-neighbors needs no join yet):
     # every node starts at min(id, neighbors) — one round fewer in the loop
-    seen = persistent_rdd_ids(sc)
     labels = (
         edges.groupBy(F.col("a").alias("id"))
         .agg(F.min("b").alias("mb"))
         .select("id", F.least("id", "mb").alias("label"))
         .localCheckpoint()
     )
-    own_ids = persistent_rdd_ids(sc) - seen
+    own(labels)
     for _ in range(max_rounds):
         nmin = (
             edges.join(labels.select(F.col("id").alias("b"), F.col("label").alias("nb")), "b")
@@ -1053,7 +1042,6 @@ def dedup_clusters(
         # change detection rides the update projection — no second join
         # against the previous labels, just a LIMIT-1 probe on the
         # checkpointed result
-        seen = persistent_rdd_ids(sc)
         new = (
             labels.join(nmin, "id", "left")
             .select(
@@ -1063,29 +1051,25 @@ def dedup_clusters(
             )
             .localCheckpoint()
         )
-        new_ids = persistent_rdd_ids(sc) - seen
+        own(new)
         changed = new.filter("_chg").limit(1).count()
-        # the superseded round's checkpoint blocks feed no live plan once
-        # `new` is materialized (localCheckpoint is eager) — drop them NOW
-        # instead of letting them pile up for the session's lifetime
-        rdd_id_releaser(sc, own_ids)()
-        own_ids = new_ids
+        # the superseded round's checkpoint feeds no live plan once
+        # `new` is materialized (localCheckpoint is eager) — drop it NOW
+        # instead of letting rounds pile up for the session's lifetime
+        release(labels)
         labels = new.drop("_chg")
         if changed == 0:
             break
     else:
         edges.unpersist()
-        rdd_id_releaser(sc, own_ids)()
-        if consume_pairs:
-            release(pairs)
+        release(labels)
+        release_except(pairs, all_ids)
         raise RuntimeError(
             f"dedup_clusters: labels still changing after {max_rounds} rounds "
             "(a component's diameter exceeds max_rounds; its cluster ids would "
             "be wrong). Raise max_rounds — rounds needed = component diameter."
         )
     edges.unpersist()
-    if consume_pairs:
-        release(pairs)
     if all_ids is not None:
         ids = all_ids.select(F.col(all_ids.columns[0]).alias("id"))
         result = ids.join(labels, "id", "left").select(
@@ -1093,7 +1077,8 @@ def dedup_clusters(
         )
     else:
         result = labels.select("id", F.col("label").alias("cluster_id"))
-    return adopt(result, rdd_id_releaser(sc, own_ids))
+    release_except(pairs, result)
+    return result
 
 
 def dedup_canonical(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
@@ -1102,15 +1087,13 @@ def dedup_canonical(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
     filtered corpus. Left-semi join, so no column changes and no row
     multiplication.
 
-    The returned plan reads the cluster result's checkpoint blocks, so
-    their ownership is carried onto it (``cache.carry``) — released with
-    the result, not when the intermediate goes out of scope. The same
-    contract applies to callers deriving from this result: carry it
-    (lineage-truncated blocks cannot recompute after release)."""
+    Consumes ``pairs`` like :func:`dedup_clusters`. The result reads the
+    cluster checkpoint and ``df``'s caches: release it once after its
+    last action (``cache.release``) — frames derived from it need
+    nothing, and neither ``pairs`` nor ``df`` is released separately."""
     clusters = dedup_clusters(pairs, df.select(id_col))
     keep = clusters.filter(F.col("id") == F.col("cluster_id"))
-    result = df.join(keep.select(F.col("id").alias(id_col)), id_col, "left_semi")
-    return carry(result, clusters)
+    return df.join(keep.select(F.col("id").alias(id_col)), id_col, "left_semi")
 
 
 def _span_gram_base(

@@ -137,7 +137,8 @@ def dsir_scores(
             ),
         )
     )
-    return C.adopt(scored, occ, tq, tp)
+    C.own(occ, tq, tp)
+    return scored
 
 
 def dsir_select(
@@ -152,6 +153,4 @@ def dsir_select(
     (ties broken on the id) — the resampling step with the noise term
     set to zero, the reproducible form a data-selection audit wants."""
     scores = dsir_scores(raw, target, id_col=id_col, text_col=text_col)
-    # carry: the top-k wrapper owns the scorer's caches (returning the
-    # bare wrapper would let the GC backstop unpersist them pre-action)
-    return C.carry(scores.orderBy(F.desc("score_micro"), id_col).limit(k), scores)
+    return scores.orderBy(F.desc("score_micro"), id_col).limit(k)

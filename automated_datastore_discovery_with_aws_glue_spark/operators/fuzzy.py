@@ -33,7 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.storagelevel import StorageLevel
 
-from automated_datastore_discovery_with_aws_glue_spark.operators.cache import adopt
+from automated_datastore_discovery_with_aws_glue_spark.operators.cache import own
 from automated_datastore_discovery_with_aws_glue_spark.operators.dedup import (
     _hashed_shingle_frame,
     _signature_expr,
@@ -170,4 +170,5 @@ def fuzzy_join(
         .filter(inter * 10000 >= F.lit(num) * union)
         .select("id_l", "id_r", F.round(inter.cast("double") / union, 4).alias("jaccard"))
     )
-    return adopt(result, *cached)
+    own(*cached)
+    return result

@@ -30,6 +30,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from automated_datastore_discovery_with_aws_glue_spark.operators.cache import own, release
+
 SCALE = 1_000_000_000_000
 
 
@@ -84,26 +86,7 @@ def pagerank(
     e_deg = e.join(outdeg, "src").select("src", "dst", "deg").persist()
 
     ranks = nodes.withColumn("r", F.lit(r0).cast("bigint"))
-    cached = [e, nodes, outdeg, e_deg]
-    from automated_datastore_discovery_with_aws_glue_spark.operators.cache import (
-        adopt,
-        persistent_rdd_ids,
-        rdd_id_releaser,
-    )
-
-    sc = edges.sparkSession.sparkContext
-    seen_ids = persistent_rdd_ids(sc)
-    # the checkpointed frames must stay PYTHON-referenced until release:
-    # dropping the wrapper lets the JVM ContextCleaner unpersist the
-    # checkpoint blocks while later rounds still read them
-    # (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). Rolling window (r15): once
-    # round t's checkpoint has materialized, round t-1's blocks feed
-    # NOTHING (round t+1 plans on top of t, the final frame on the last
-    # round) — release them immediately, so peak checkpoint storage is
-    # TWO rounds' node tables however many iterations run, and driver/
-    # executor memory stays flat when iterations double.
-    cp_refs: list[DataFrame] = []
-    prev_ids: set[int] = set()
+    prev = None
     for _ in range(iterations):
         # each round's ranks feed TWO branches (dangling + inflow).
         # localCheckpoint — not persist — so round t+1's logical plan
@@ -116,19 +99,16 @@ def pagerank(
         # reads (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND); one small job per
         # round is the robust shape. The dangling mass stays a LAZY
         # 1-row frame (crossJoin) — no per-round collect.
-        before_ids = persistent_rdd_ids(sc)
         ranks = ranks.localCheckpoint(eager=True)
-        cp_refs.append(ranks)
-        new_ids = persistent_rdd_ids(sc) - before_ids
-        if prev_ids:
-            # the previous round's blocks were fully consumed by the
-            # eager materialization above — free them now, keeping only
-            # the newest checkpoint alive (its python ref stays in
-            # cp_refs until the final releaser runs)
-            rdd_id_releaser(sc, prev_ids)()
-            if len(cp_refs) > 1:
-                cp_refs.pop(0)
-        prev_ids = new_ids
+        own(ranks)
+        if prev is not None:
+            # round t-1's blocks were fully consumed by the eager
+            # materialization above and feed nothing now (round t+1
+            # plans on top of t) — free them, so peak checkpoint
+            # storage is TWO rounds' node tables however many
+            # iterations run
+            release(prev)
+        prev = ranks
         dang = ranks.filter(F.col("_dang")).agg(
             F.expr(f"coalesce(sum(r), 0) div {n}")
             .cast("bigint")
@@ -152,18 +132,12 @@ def pagerank(
                 ).cast("bigint").alias("r"),
             )
         )
-    own_ids = persistent_rdd_ids(sc) - seen_ids
-    releaser = rdd_id_releaser(sc, own_ids)
-
-    def _release_cps(refs=cp_refs, rel=releaser) -> None:
-        rel()
-        refs.clear()
-
-    return adopt(
-        ranks.select("node", F.col("r").alias("rank_mass")),
-        *cached,
-        _release_cps,
-    )
+    if iterations > 0:
+        own(e, outdeg, nodes, e_deg)
+    else:  # no round read e_deg; the result reads the node table only
+        e_deg.unpersist()
+        own(e, outdeg, nodes)
+    return ranks.select("node", F.col("r").alias("rank_mass"))
 
 
 def pagerank_oracle_sql(

@@ -22,9 +22,9 @@ loses exactness). Two policies, both accounted for:
   pair-level completeness *within* the bucket.
 
 The bucket-size frame is PERSISTED and returned to the caller: the
-action-time (keys, count) joins share its blocks, and callers adopt the
-sizes frame onto their result (``cache.adopt``) so the blocks are
-released with it.
+action-time (keys, count) joins share its blocks, and callers register
+the sizes frame (``cache.own``) so the blocks are released with their
+result.
 
 Accounting modes (``account``):
 
@@ -106,8 +106,8 @@ def split_hot_buckets(
     ``account=True``; the default ``"async"`` mode logs the same counts
     from a daemon thread without blocking construction — see module
     docstring), ``sizes`` = the persisted (keys, count) frame both
-    filtered sides read: tie its lifetime to the operator result
-    (``cache.adopt``). The size aggregate shuffles only (keys, count) —
+    filtered sides read: register it with the operator result
+    (``cache.own``). The size aggregate shuffles only (keys, count) —
     never document payloads — and is computed ONCE (whichever of the
     probe or the caller's action runs first populates the cache; the
     other reuses it)."""

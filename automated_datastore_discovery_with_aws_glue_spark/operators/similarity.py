@@ -32,7 +32,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.storagelevel import StorageLevel
 
-from automated_datastore_discovery_with_aws_glue_spark.operators.cache import adopt
+from automated_datastore_discovery_with_aws_glue_spark.operators.cache import own
 from automated_datastore_discovery_with_aws_glue_spark.operators.hot import (
     HOT_POLICIES,
     split_hot_buckets,
@@ -183,7 +183,8 @@ def blocked_near_dup(
         .filter(F.col("similarity") >= threshold)
         .select("id_a", "id_b", "block", "similarity")
     )
-    return adopt(result, *cached)
+    own(*cached)
+    return result
 
 
 # ---------------------------------------------------------------------------
@@ -334,7 +335,8 @@ def lsh_near_dup(
         .filter(F.col("similarity") >= threshold)
         .select("id_a", "id_b", "similarity")
     )
-    return adopt(result, *cached)
+    own(*cached)
+    return result
 
 
 def ivf_centroids(

@@ -959,7 +959,7 @@ def redirect_chains(
     edge-derivation subtree (measured 5x the operator's wall-clock on
     an extraction-derived edge set), and the analyzer would re-walk
     the full lineage per level."""
-    from automated_datastore_discovery_with_aws_glue_spark.operators.cache import adopt
+    from automated_datastore_discovery_with_aws_glue_spark.operators.cache import own
 
     e = (
         edges.select(F.col(src_col).alias("_rc_s"), F.col(dst_col).alias("_rc_d"))
@@ -1024,17 +1024,15 @@ def redirect_chains(
     # the shuffle join is the honest shape.
     last = e.select(F.col("_rc_s").alias("_cur"), F.lit(1).alias("_more")).distinct()
     out = cur.join(last, "_cur", "left")
-    return adopt(
-        out.select(
-            "start",
-            F.col("_cur").alias("final_url"),
-            "n_hops",
-            F.when(F.col("_loop"), F.lit("loop"))
-            .when(F.col("_done") | F.col("_more").isNull(), F.lit("ok"))
-            .otherwise(F.lit("cap"))
-            .alias("status"),
-        ),
-        e,
+    own(e)
+    return out.select(
+        "start",
+        F.col("_cur").alias("final_url"),
+        "n_hops",
+        F.when(F.col("_loop"), F.lit("loop"))
+        .when(F.col("_done") | F.col("_more").isNull(), F.lit("ok"))
+        .otherwise(F.lit("cap"))
+        .alias("status"),
     )
 
 

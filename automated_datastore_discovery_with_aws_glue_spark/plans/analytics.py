@@ -307,7 +307,7 @@ def er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("p_partkey")
     )
-    return C.carry(result, clusters)
+    return result
 
 
 ER_CLUSTERS_SQL = f"""
@@ -522,8 +522,8 @@ def colloc_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vocabulary-sized unigram table, scalar totals broadcast as
     1-row frames. The top-k is a global sort of the min-count
     survivors — the collocation TYPE table, not the corpus. The token
-    frame is persisted (it feeds four branches) and its lifetime is
-    adopted onto the result."""
+    frame is persisted (it feeds four branches) and the result owns it
+    (``cache.own``)."""
     from automated_datastore_discovery_with_aws_glue_spark.operators.text import (
         normalize_text,
         tokens,
@@ -564,7 +564,8 @@ def colloc_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("lift"), "w1", "w2")
         .limit(_COLLOC_TOP_K)
     )
-    return C.adopt(out, words)
+    C.own(words)
+    return out
 
 
 COLLOC_LIFT_SQL = f"""
@@ -827,15 +828,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("C"), F.col("o_custkey")).alias("dst"),
     )
     ranks = pagerank(edges, iterations=_PR_ITERS)
-    # carry: the orderBy wrapper must keep the operator's caches (and
-    # checkpoint blocks) alive until the caller's action — without it
-    # the GC backstop released them BEFORE collect and every iteration
-    # recomputed from scratch
-    from automated_datastore_discovery_with_aws_glue_spark.operators.cache import carry
-
-    return carry(
-        ranks.orderBy(F.desc("rank_mass"), "node").limit(_PR_TOP_K), ranks
-    )
+    return ranks.orderBy(F.desc("rank_mass"), "node").limit(_PR_TOP_K)
 
 
 def _graph_pagerank_sql() -> str:

@@ -61,7 +61,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-from automated_datastore_discovery_with_aws_glue_spark.operators.cache import adopt, release
+from automated_datastore_discovery_with_aws_glue_spark.operators.cache import (
+    own,
+    release,
+    release_except,
+)
 from automated_datastore_discovery_with_aws_glue_spark.operators.dedup import (
     _hashed_shingle_frame,
     _signature_expr,
@@ -495,7 +499,7 @@ class CorpusDedupIndex:
             .filter(inter * 10000 >= F.lit(num) * union)
             .select("id_a", "id_b", F.round(inter.cast("double") / union, 4).alias("jaccard"))
         )
-        adopt(out, banded, cand, *( [sizes] if sizes is not None else [] ))
+        own(banded, cand, *([sizes] if sizes is not None else []))
         return out
 
     def rebuild(self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -530,7 +534,7 @@ class CorpusDedupIndex:
         )
         canon = dedup_canonical(docs, pairs, id_col)
         out = canon.localCheckpoint()
-        release(canon)
+        release_except(canon, docs)
         base = _hashed_shingle_frame(out, id_col, text_col, self.n).persist(
             StorageLevel.MEMORY_AND_DISK
         )
@@ -624,7 +628,9 @@ def incr_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx.ingest(docs.filter(F.col("doc_id") % 10 < 9))
         idx.ingest(docs.filter(F.col("doc_id") % 10 >= 9))
         # localCheckpoint: the result must outlive the temp index dir
-        return idx.kept_ids().orderBy("id").localCheckpoint()
+        out = idx.kept_ids().orderBy("id").localCheckpoint()
+        own(out)
+        return out
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -699,6 +705,7 @@ def incr_classify_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("columnName")
             .localCheckpoint()
         )
+        own(out)
         return out
     finally:
         try:
@@ -736,7 +743,9 @@ def incr_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ix = IvfVectorIndex(spark, root, n_cells=16, iterations=2)
         ix.build(emb.filter(F.col("vec_id") % 10 < 9))
         ix.ingest(emb.filter(F.col("vec_id") % 10 >= 9), batch_id=1)
-        return ix.topk(query, 10, n_probe=4).localCheckpoint()
+        out = ix.topk(query, 10, n_probe=4).localCheckpoint()
+        own(out)
+        return out
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -785,6 +794,7 @@ def incr_frontier_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         fr.ingest(pages.filter(F.col("doc_id") % 10 < 9), "url", "html")
         delta = fr.ingest(pages.filter(F.col("doc_id") % 10 >= 9), "url", "html")
         # localCheckpoint inside ingest: the result outlives the store
+        own(delta)
         return delta.orderBy("url")
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -60,7 +60,7 @@ DEDUP_EXACT_SQL = f"""
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.jaccard_pairs(docs, "doc_id", "text", "lang", n=3, threshold=0.5)
-    return C.carry(pairs.orderBy("id_a", "id_b"), pairs)
+    return pairs.orderBy("id_a", "id_b")
 
 
 DEDUP_JACCARD_SQL = f"""
@@ -92,10 +92,7 @@ def dedup_clusters_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.jaccard_pairs(docs, "doc_id", "text", "lang", n=3, threshold=0.5)
     clusters = D.dedup_clusters(pairs, docs.select("doc_id"))
-    result = clusters.select(F.col("id").alias("doc_id"), "cluster_id").orderBy("doc_id")
-    # the result reads the cluster checkpoint blocks — carry their
-    # ownership so the GC backstop can't free them before the collect
-    return C.carry(result, clusters)
+    return clusters.select(F.col("id").alias("doc_id"), "cluster_id").orderBy("doc_id")
 
 
 DEDUP_CLUSTERS_SQL = f"""
@@ -137,7 +134,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation; recall vs the exact pairs is asserted in pytest)."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
-    return C.carry(pairs.orderBy("id_a", "id_b"), pairs)
+    return pairs.orderBy("id_a", "id_b")
 
 
 def dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,7 +146,7 @@ def dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.minhash_lsh_pairs_md5(
         docs, "doc_id", "text", n=3, num_hashes=16, bands=8, threshold=0.5
     )
-    return C.carry(pairs.orderBy("id_a", "id_b"), pairs)
+    return pairs.orderBy("id_a", "id_b")
 
 
 DEDUP_MINHASH_LSH_MD5_SQL = f"""
@@ -195,7 +192,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     xxhash64 has no DuckDB twin; sketch properties tested in pytest)."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.simhash_pairs(docs, "doc_id", "text", "lang", max_hamming=3)
-    return C.carry(pairs.orderBy("id_a", "id_b"), pairs)
+    return pairs.orderBy("id_a", "id_b")
 
 
 # ---------------------------------------------------------------------------
@@ -427,8 +424,7 @@ def corpus_clean(
 
     ``kept`` (quality stats + filter) feeds BOTH the pair generator and
     the canonical keep side — persisted once instead of recomputing the
-    scoring pass, released with the result via the cache-lifecycle
-    machinery (``cache.adopt``/``carry``)."""
+    scoring pass, released with the result (``operators/cache.py``)."""
     from pyspark.storagelevel import StorageLevel
 
     _validate_candidates(candidates, max_bucket)  # before any persist
@@ -442,8 +438,8 @@ def corpus_clean(
         kept, candidates=candidates, n=3, threshold=0.5, max_bucket=max_bucket
     )
     canon = D.dedup_canonical(kept, pairs, "doc_id")
-    result = canon.select("doc_id", "quality_score").orderBy("doc_id")
-    return C.adopt(C.carry(result, canon), kept)
+    C.own(kept)
+    return canon.select("doc_id", "quality_score").orderBy("doc_id")
 
 
 def corpus_clean_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -720,14 +716,14 @@ def doc_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab break on the term, and both engines fold the same doubles."""
     docs = load_table(spark, sf_dir, "documents")
     ppl = _lm_perplexity_frame(docs)
-    return C.carry(ppl.orderBy("doc_id"), ppl)
+    return ppl.orderBy("doc_id")
 
 
 def _lm_perplexity_frame(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, perplexity) — the unordered body of
     :func:`doc_lm_perplexity`, reused by the composed signal gate.
-    Carries an adopted cache (the term-count table) — derive from it
-    with ``C.carry`` so the cache lives until the caller's action."""
+    Its plan reads a cache it owns (the term-count table): release the
+    frame, or one derived from it, after the last action."""
     toks = docs.select(
         "doc_id", F.explode(TX.tokens(F.col("text"))).alias("term")
     ).filter(F.col("term") != "")
@@ -760,12 +756,10 @@ def _lm_perplexity_frame(docs: DataFrame) -> DataFrame:
             ).alias("ln_p"),
         )
     )
-    return C.adopt(
-        scored.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.exp(-F.avg("ln_p")), 4).alias("perplexity"),
-        ),
-        tc,
+    C.own(tc)
+    return scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_tokens"),
+        F.round(F.exp(-F.avg("ln_p")), 4).alias("perplexity"),
     )
 
 
@@ -831,9 +825,8 @@ def corpus_filter_signals(
         TX.classifier_score(F.col("text")).alias("cls_quality"),
         "dup_gram_frac",
     )
-    ppl_full = _lm_perplexity_frame(docs)
-    ppl = ppl_full.select("doc_id", "perplexity")
-    return C.carry(
+    ppl = _lm_perplexity_frame(docs).select("doc_id", "perplexity")
+    return (
         proj.join(ppl, "doc_id")
         .filter(
             (F.col("quality_score") >= min_quality)
@@ -841,8 +834,7 @@ def corpus_filter_signals(
             & (F.col("dup_gram_frac") <= max_dup)
             & (F.col("perplexity") <= max_ppl)
         )
-        .orderBy("doc_id"),
-        ppl_full,
+        .orderBy("doc_id")
     )
 
 
@@ -1037,7 +1029,7 @@ def emb_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_block=EMB_NEAR_DUP_MAX_BLOCK,
         on_hot="route",
     )
-    return C.carry(pairs.orderBy("id_a", "id_b"), pairs)
+    return pairs.orderBy("id_a", "id_b")
 
 
 EMB_NEAR_DUP_SQL = f"""
@@ -1080,7 +1072,7 @@ def emb_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = S.lsh_near_dup(
         emb, "vec_id", "embedding", threshold=0.35, n_bands=8, band_planes=8
     )
-    return C.carry(pairs.orderBy("id_a", "id_b"), pairs)
+    return pairs.orderBy("id_a", "id_b")
 
 
 def _duck_dot(vexpr: str, plane) -> str:
@@ -1165,7 +1157,7 @@ def emb_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     clusters = D.dedup_clusters(pairs, emb.select("vec_id"))
     result = clusters.select(F.col("id").alias("vec_id"), "cluster_id").orderBy("vec_id")
-    return C.carry(result, clusters)
+    return result
 
 
 def emb_canonical_oracle_sql(**kw) -> str:
@@ -1571,7 +1563,8 @@ def corpus_prepare(
         )
         .orderBy("doc_id")
     )
-    return C.adopt(C.carry(result, canon), kept)
+    C.own(kept)
+    return result
 
 
 def _corpus_prepare_sql(candidates: str = "lsh_md5") -> str:
@@ -2266,14 +2259,14 @@ def doc_lm_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ln_p"),
         )
     )
-    return C.adopt(
+    C.own(tc)
+    return (
         scored.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_transitions"),
             F.round(F.exp(-F.avg("ln_p")), 4).alias("perplexity2"),
         )
-        .orderBy("doc_id"),
-        tc,
+        .orderBy("doc_id")
     )
 
 
@@ -2618,12 +2611,8 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     target = docs.filter(F.col("lang") == "en")
-    # carry: the orderBy wrapper must own the scorer's adopted caches —
-    # returning the bare wrapper lets the GC backstop unpersist them
-    # before the caller's action (every cached subtree then silently
-    # recomputes; the r14 lost-cache class)
     scores = dsir.dsir_scores(docs, target)
-    return C.carry(scores.orderBy("doc_id"), scores)
+    return scores.orderBy("doc_id")
 
 
 CORPUS_DSIR_WEIGHTS_SQL = r"""
@@ -2705,7 +2694,7 @@ def fuzzy_join_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_text="text", right_text="feed_text",
         n=3, num_hashes=16, bands=8, threshold=0.5, hash_fn="md5",
     )
-    return C.carry(pairs.orderBy("id_l", "id_r"), pairs)
+    return pairs.orderBy("id_l", "id_r")
 
 
 FUZZY_JOIN_DOCS_SQL = f"""
@@ -2779,9 +2768,7 @@ def corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     sel = dsir.dsir_select(docs, docs.filter(F.col("lang") == "en"), 150)
-    # carry: sel owns the scorer's caches; the orderBy wrapper must own
-    # sel in turn or the backstop releases the whole chain pre-action
-    return C.carry(sel.orderBy("doc_id"), sel)
+    return sel.orderBy("doc_id")
 
 
 CORPUS_DSIR_SELECT_SQL = (
@@ -3242,7 +3229,7 @@ def knn_ivf_pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE assignment pass: the cell argmax and the m-wide code argmin
     # are interpreted HOF lambdas (the costly step) — persist so the
     # probe joins filter the materialized rows instead of re-deriving
-    # them; lifetime rides the returned frame (cache.adopt)
+    # them; the returned frame owns it (cache.own)
     assigned = base.select(
         "vec_id",
         "_qv",
@@ -3301,7 +3288,8 @@ def knn_ivf_pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "rnk", "vec_id", "adc_d2", "exact_d2")
         .orderBy("query_id", "rnk")
     )
-    return C.adopt(result, assigned, tbase)
+    C.own(tbase, assigned)
+    return result
 
 
 _ADC_SCORING_CTES = """kf AS MATERIALIZED (
@@ -3418,7 +3406,6 @@ def ann_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "cell int, n_vecs bigint, share_bp bigint, mean_cos_micro bigint"
         )
-    from automated_datastore_discovery_with_aws_glue_spark.operators.cache import adopt
     from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import _lit_imatrix_sql
 
     assigned = (
@@ -3437,7 +3424,8 @@ def ann_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_vecs"), F.sum("_dotq").alias("_sdot")
     )
     total = per.agg(F.sum("n_vecs").alias("_total"))
-    return adopt(
+    C.own(tbase)
+    return (
         per.crossJoin(F.broadcast(total))
         .select(
             F.col("_cell").alias("cell"),
@@ -3445,8 +3433,7 @@ def ann_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(n_vecs * 10000) div _total").alias("share_bp"),
             F.expr("_sdot div n_vecs").alias("mean_cos_micro"),
         )
-        .orderBy("cell"),
-        tbase,
+        .orderBy("cell")
     )
 
 
@@ -3574,7 +3561,8 @@ def emb_ivf_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cos_micro") >= threshold_micro)
         .orderBy("qid", "vec_id", "cell")
     )
-    return C.adopt(result, base, tbase)
+    C.own(tbase, base)
+    return result
 
 
 EXTRA_QUERIES["emb_ivf_join"] = emb_ivf_join
@@ -3679,9 +3667,9 @@ def knn_index_topk_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, root, n_cells=4, iterations=2, hash_fn="md5", pq_m=8, pq_k=8
         )
         ix.build(emb)
-        rows = ix.topk_batch(
-            qlocal, 10, n_probe=2, mode="adc", rerank_factor=5
-        ).collect()
+        top = ix.topk_batch(qlocal, 10, n_probe=2, mode="adc", rerank_factor=5)
+        rows = top.collect()
+        C.release(top)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
@@ -3723,7 +3711,9 @@ def knn_index_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         ix = IvfVectorIndex(spark, root, n_cells=4, iterations=2, hash_fn="md5")
         ix.build(emb)
-        rows = ix.topk_batch(qlocal, 10, n_probe=2, mode="exact").collect()
+        top = ix.topk_batch(qlocal, 10, n_probe=2, mode="exact")
+        rows = top.collect()
+        C.release(top)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(
@@ -3820,10 +3810,12 @@ def emb_index_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # ordered=True: the twin keeps the deterministic presentation
         # order; the production default skips that corpus-scale sort
-        rows = ix.similarity_join(
+        joined = ix.similarity_join(
             incoming, threshold_micro=250_000, n_probe=2, exclude_self=True,
             ordered=True,
-        ).collect()
+        )
+        rows = joined.collect()
+        C.release(joined)
     finally:
         tbase.unpersist()
         shutil.rmtree(root, ignore_errors=True)

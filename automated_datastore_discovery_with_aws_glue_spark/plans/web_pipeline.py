@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from automated_datastore_discovery_with_aws_glue_spark.operators import text as TX
 from automated_datastore_discovery_with_aws_glue_spark.operators import web as W
-from automated_datastore_discovery_with_aws_glue_spark.operators.cache import adopt, carry
+from automated_datastore_discovery_with_aws_glue_spark.operators.cache import own
 from automated_datastore_discovery_with_aws_glue_spark.sources.readers import load_table
 
 # -- shared synthetic-URL fixture -------------------------------------------
@@ -1728,7 +1728,8 @@ def corpus_robots_directives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_sitemaps"),
         F.min("_s").alias("_first"),
     )
-    return adopt(
+    own(hosts)
+    return (
         hosts.join(nr, "host", "left")
         .join(delay, "host", "left")
         .join(sm_agg, "host", "left")
@@ -1740,8 +1741,7 @@ def corpus_robots_directives(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_first.u").alias("first_sitemap"),
             F.col("_first.oh").alias("sm_on_host"),
         )
-        .orderBy("host"),
-        hosts,
+        .orderBy("host")
     )
 
 
@@ -2066,7 +2066,8 @@ def corpus_robots_agents(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-    return adopt(out, robots)
+    own(robots)
+    return out
 
 
 def _robots_agents_sql() -> str:
@@ -2509,12 +2510,10 @@ def crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = W.crawl_schedule(
         frontier, delays, id_col="doc_id", default_delay_ms=_CS_DEFAULT_MS
     )
-    return adopt(
-        out.select(
-            "doc_id", "host", "target", "seq", "delay_ms", "fetch_slot_ms"
-        ).orderBy("doc_id"),
-        robots,
-    )
+    own(robots)
+    return out.select(
+        "doc_id", "host", "target", "seq", "delay_ms", "fetch_slot_ms"
+    ).orderBy("doc_id")
 
 
 def _crawl_schedule_sql() -> str:
@@ -3273,13 +3272,9 @@ def corpus_redirect_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expression tree through analysis again (persist dedups the
     # COMPUTE, not the analyzer cost — measured ~2x wall-clock)
     edges = edges.localCheckpoint(eager=False)
+    own(edges)
     out = W.redirect_chains(edges, max_hops=_RC_HOPS)
-    # carry: the select/orderBy wrapper must own the walker's adopted
-    # caches — returning the bare wrapper lets the GC backstop release
-    # them before the caller's action (the r14 lost-cache class)
-    return carry(
-        out.select("start", "final_url", "n_hops", "status").orderBy("start"), out
-    )
+    return out.select("start", "final_url", "n_hops", "status").orderBy("start")
 
 
 def _redirect_chains_sql() -> str:
@@ -3675,13 +3670,9 @@ def corpus_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint by standard practice (executor-local here; a cluster
     # with unreliable executors would use a reliable checkpoint dir).
     edges = edges.localCheckpoint(eager=False)
+    own(edges)
     ranks = pagerank(edges, iterations=_HR_ITERS)
-    # carry: keep the operator's caches/checkpoint blocks alive past
-    # the orderBy wrapper (the GC backstop would otherwise release
-    # them before the caller's action)
-    from automated_datastore_discovery_with_aws_glue_spark.operators.cache import carry
-
-    return carry(ranks.orderBy(F.desc("rank_mass"), "node"), ranks)
+    return ranks.orderBy(F.desc("rank_mass"), "node")
 
 
 def _host_rank_sql() -> str:

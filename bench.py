@@ -265,10 +265,10 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001 - report, don't abort
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
         finally:
-            # operators adopt their internal persisted frames onto the
-            # returned DataFrame; release() frees them deterministically
-            # so one query's caches never charge the next query's memory
-            # — ON FAILURE TOO, or a failed query skews what follows
+            # release() frees the operator caches and checkpoints the
+            # returned plan reads, so one query's caches never charge the
+            # next query's memory — ON FAILURE TOO, or a failed query
+            # skews what follows
             if df is not None:
                 release(df)
 

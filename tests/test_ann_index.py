@@ -808,3 +808,52 @@ def test_topk_batch_probe_cells_modes_agree(spark, tmp_path):
     assert got_auto == got_collect == got_all
     with pytest.raises(ValueError, match="probe_cells"):
         ix.topk_batch(queries, 5, probe_cells="bogus").collect()
+
+
+def test_quantizer_memo_holds_the_version_it_is_keyed_by(spark, tmp_path):
+    """ADVICE r15: with no pinned quantizer version the memo key is the
+    latest CENTROIDS/CODEBOOKS version at resolve time. A rebuild that
+    commits between that resolve and the read must not file the newer
+    matrix under the older key — a reader pinned to the older version
+    would then be served the wrong quantizer from the memo."""
+    import os
+
+    from automated_datastore_discovery_with_aws_glue_spark.operators.ann import CENTROIDS, CODEBOOKS
+
+    df, _rows = _corpus(spark, n=60)
+    root = str(tmp_path / "ix")
+    ix = IvfVectorIndex(spark, root, n_cells=4, iterations=1, pq_m=4, pq_k=8)
+    ix.build(df)
+    # an unpinned (pre-r11) vectors version: readers resolve latest
+    v = ix.store.latest_version("vectors")
+    os.remove(os.path.join(ix.store._version_dir("vectors", v), "_TABLE_META"))
+    pinned = {t: ix.store.latest_version(t) for t in (CENTROIDS, CODEBOOKS)}
+    fresh = IvfVectorIndex(spark, root, n_cells=4, iterations=1, pq_m=4, pq_k=8)
+    want_cents, want_books = fresh.centroids_int(), fresh.codebooks_int()
+
+    bogus = {
+        CENTROIDS: spark.createDataFrame(
+            [(c, p, 999_999) for c in range(4) for p in range(8)],
+            "cell int, pos int, c bigint",
+        ),
+        CODEBOOKS: spark.createDataFrame(
+            [(j, c, p, 999_999) for j in range(4) for c in range(8) for p in range(2)],
+            "j int, cell int, pos int, c bigint",
+        ),
+    }
+    racer = IvfVectorIndex(spark, root, n_cells=4, iterations=1, pq_m=4, pq_k=8)
+    real_read = racer.store.read
+    raced: set[str] = set()
+
+    def racing_read(table, *, version=None):
+        if table in bogus and table not in raced:
+            raced.add(table)
+            racer.store.overwrite(table, bogus[table])  # a rebuild commits
+        return real_read(table, version=version)
+
+    racer.store.read = racing_read
+    assert racer.centroids_int() == want_cents
+    assert racer.codebooks_int() == want_books
+    assert raced == set(bogus)
+    assert racer._quantizer_cache[("cent", pinned[CENTROIDS])] == want_cents
+    assert racer._quantizer_cache[("book", pinned[CODEBOOKS])] == want_books

@@ -6,9 +6,10 @@ must be freed when the caller is done — not accumulate until they evict
 each other. Contract under test:
 
 - after collecting an operator's result and calling ``cache.release``
-  on it, NO persisted RDD remains (``getPersistentRDDs`` empty);
-- ``cache_scope`` frees everything adopted inside it on exit;
-- the GC backstop frees caches when the result is garbage-collected;
+  on it, NO persisted RDD it created remains (``getPersistentRDDs``
+  compared with a snapshot taken before the operator ran);
+- releasing a frame derived from a result frees the result's caches;
+- two results sharing a cached plan each keep it until both are released;
 - released results with intact lineage still recompute correctly.
 """
 
@@ -22,11 +23,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from automated_datastore_discovery_with_aws_glue_spark.operators import similarity
-from automated_datastore_discovery_with_aws_glue_spark.operators.cache import (
-    cache_scope,
-    persistent_rdd_ids,
-    release,
-)
+from automated_datastore_discovery_with_aws_glue_spark.operators.cache import release
 from automated_datastore_discovery_with_aws_glue_spark.operators.dedup import (
     dedup_canonical,
     dedup_clusters,
@@ -54,8 +51,14 @@ def emb(spark):
     return spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
 
 
-def _no_cached_rdds(spark):
-    return persistent_rdd_ids(spark.sparkContext) == set()
+def _snapshot(spark) -> set[int]:
+    """Ids of every persisted RDD, localCheckpoint blocks included."""
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _leaf_names(df) -> set[str]:
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    return {leaves.apply(i).nodeName() for i in range(leaves.size())}
 
 
 @pytest.mark.parametrize(
@@ -74,19 +77,19 @@ def _no_cached_rdds(spark):
     ids=["jaccard", "minhash_lsh", "simhash", "blocked", "lsh_near_dup"],
 )
 def test_release_leaves_no_cached_rdds(spark, docs, emb, make):
-    assert _no_cached_rdds(spark), "leftover caches from another test"
+    before = _snapshot(spark)
     result = make(docs, emb)
     first = result.collect()
-    assert persistent_rdd_ids(spark.sparkContext), "operator should cache while live"
+    assert _snapshot(spark) - before, "operator should cache while live"
     release(result)
-    assert _no_cached_rdds(spark)
+    assert _snapshot(spark) - before == set()
     # lineage is intact for persist-only operators: released frames
     # recompute (uncached) with identical results
     assert sorted(map(tuple, result.collect())) == sorted(map(tuple, first))
 
 
 def test_cluster_pipeline_releases_checkpoints(spark, docs):
-    assert _no_cached_rdds(spark)
+    before = _snapshot(spark)
     pairs = jaccard_pairs(docs, "doc_id", "text", "lang", threshold=0.4)
     clusters = dedup_clusters(pairs, docs.select("doc_id"))
     got = {r["id"]: r["cluster_id"] for r in clusters.collect()}
@@ -94,51 +97,56 @@ def test_cluster_pipeline_releases_checkpoints(spark, docs):
     # superseded per-round checkpoints were dropped eagerly; only the
     # final round's blocks (backing the live result) may remain
     release(clusters)
-    assert _no_cached_rdds(spark)
+    assert _snapshot(spark) - before == set()
 
 
 def test_canonical_releases_everything(spark, docs):
-    assert _no_cached_rdds(spark)
+    before = _snapshot(spark)
     pairs = jaccard_pairs(docs, "doc_id", "text", "lang", threshold=0.4)
     kept = dedup_canonical(docs, pairs, "doc_id")
     ids = sorted(r["doc_id"] for r in kept.collect())
     assert ids == [1, 4, 5]
     release(kept)
-    assert _no_cached_rdds(spark)
+    assert _snapshot(spark) - before == set()
 
 
-def test_gc_backstop_frees_caches(spark, docs):
-    assert _no_cached_rdds(spark)
-    result = jaccard_pairs(docs, "doc_id", "text", "lang", threshold=0.4)
-    result.collect()
-    assert persistent_rdd_ids(spark.sparkContext)
-    del result
-    gc.collect()
-    assert _no_cached_rdds(spark)
+def test_release_of_derived_frame_frees_its_parents_caches(spark, docs):
+    """A derived frame reads its parent's caches in its own plan, so
+    releasing it frees them — no hand-over from parent to child."""
+    before = _snapshot(spark)
+    pairs = minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.4)
+    ordered = pairs.orderBy("id_a")
+    assert ordered.collect()
+    assert _snapshot(spark) - before, "operator should cache while live"
+    release(ordered)
+    assert _snapshot(spark) - before == set()
 
 
-def test_cache_scope_owns_and_frees(spark, docs):
-    assert _no_cached_rdds(spark)
-    with cache_scope():
-        result = jaccard_pairs(docs, "doc_id", "text", "lang", threshold=0.4)
-        rows = result.collect()
-        assert persistent_rdd_ids(spark.sparkContext)
-        # release() inside a scope is a no-op: the scope owns the caches
-        release(result)
-        assert persistent_rdd_ids(spark.sparkContext)
-        assert rows is not None
-    assert _no_cached_rdds(spark)
+def test_shared_plan_survives_the_first_release(spark, docs):
+    """Spark keys caches by plan: two results of the same operator over
+    the same input share one cache, and releasing the first must not
+    free it under the second."""
+    before = _snapshot(spark)
+    a = minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.4)
+    b = minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.4)
+    want = sorted(map(tuple, a.collect()))
+    release(a)
+    # a fresh plan over b still reads the cache instead of recomputing
+    assert "InMemoryRelation" in _leaf_names(b.select("*"))
+    assert sorted(map(tuple, b.collect())) == want
+    release(b)
+    assert _snapshot(spark) - before == set()
 
 
 def test_corpus_clean_releases(spark):
     from automated_datastore_discovery_with_aws_glue_spark.plans.llm_pipeline import corpus_clean
 
-    assert _no_cached_rdds(spark)
+    before = _snapshot(spark)
     result = corpus_clean(spark, SF_DIR)
     rows = result.collect()
     assert len(rows) > 0
     release(result)
-    assert _no_cached_rdds(spark)
+    assert _snapshot(spark) - before == set()
 
 
 def test_query_layer_entries_release(spark):
@@ -157,20 +165,21 @@ def test_query_layer_entries_release(spark):
         "emb_near_dup_lsh",
         "corpus_prepare",
     ]:
-        assert _no_cached_rdds(spark), f"dirty session before {name}"
+        before = _snapshot(spark)
         df = queries[name](spark, SF_DIR)
         df.collect()
         release(df)
-        assert _no_cached_rdds(spark), f"{name} leaked caches after release"
+        assert _snapshot(spark) - before == set(), f"{name} leaked caches after release"
 
 
 def test_released_cluster_result_still_readable_before_release(spark, docs):
     """Order matters: collect-then-release is the contract. The collect
     must see checkpoint blocks alive even though the intermediate frames
-    went out of scope inside the operator (carry keeps them pinned)."""
+    went out of scope inside the operator (the registry keeps them)."""
+    before = _snapshot(spark)
     pairs = jaccard_pairs(docs, "doc_id", "text", "lang", threshold=0.4)
     clusters = dedup_clusters(pairs, docs.select("doc_id"))
-    gc.collect()  # would free the blocks if ownership weren't carried
+    gc.collect()  # would free the blocks if nothing owned them
     assert len(clusters.collect()) == 5
     release(clusters)
-    assert _no_cached_rdds(spark)
+    assert _snapshot(spark) - before == set()

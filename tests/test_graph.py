@@ -6,15 +6,21 @@ recurrence."""
 
 from __future__ import annotations
 
+from automated_datastore_discovery_with_aws_glue_spark.operators.cache import own, release
 from automated_datastore_discovery_with_aws_glue_spark.operators.graph import SCALE, pagerank
+
+
+def persistent_rdd_ids(sc) -> set[int]:
+    """Ids of every persisted RDD, localCheckpoint blocks included."""
+    return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
 
 
 def _ranks(spark, edge_rows, iterations=5):
     e = spark.createDataFrame(edge_rows, "src string, dst string")
-    return {
-        r["node"]: r["rank_mass"]
-        for r in pagerank(e, iterations=iterations).collect()
-    }
+    out = pagerank(e, iterations=iterations)
+    ranks = {r["node"]: r["rank_mass"] for r in out.collect()}
+    release(out)
+    return ranks
 
 
 def _py_pagerank(edge_rows, iterations):
@@ -91,11 +97,6 @@ def test_pagerank_checkpoint_storage_is_bounded_by_two_rounds(spark):
     after the operator returns is ONE checkpoint (the last round's, which
     backs the returned plan) — flat in the iteration count, not O(k).
     Doubling iterations must not grow the retained checkpoint set."""
-    from automated_datastore_discovery_with_aws_glue_spark.operators.cache import (
-        persistent_rdd_ids,
-        release,
-    )
-
     sc = spark.sparkContext
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c")]
 
@@ -111,3 +112,30 @@ def test_pagerank_checkpoint_storage_is_bounded_by_two_rounds(spark):
 
     k5, k10 = retained(5), retained(10)
     assert k5 == k10, f"checkpoint footprint grew with iterations: {k5} vs {k10}"
+
+
+def test_pagerank_leaves_a_concurrent_pipelines_checkpoint_alone(spark, monkeypatch):
+    """Another pipeline on the shared session checkpoints while pagerank
+    runs its rounds: pagerank frees only its own rounds' blocks, so the
+    foreign checkpoint still reads after pagerank has returned (its
+    blocks cannot be recomputed once freed)."""
+    foreign_src = spark.range(40).selectExpr("id", "id * 3 AS x")
+    frame_cls = type(foreign_src)
+    foreign = []
+    real = frame_cls.localCheckpoint
+
+    def racing(self, *args, **kwargs):
+        out = real(self, *args, **kwargs)
+        if not foreign:  # pagerank's first round: the race, made deterministic
+            foreign.append(real(foreign_src))
+        return out
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", racing)
+    edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "a")], ["src", "dst"])
+    out = pagerank(edges, iterations=3)
+    assert len(out.collect()) == 3
+    monkeypatch.undo()
+    release(out)
+    assert sorted(r["x"] for r in foreign[0].collect()) == [3 * i for i in range(40)]
+    own(foreign[0])
+    release(foreign[0])

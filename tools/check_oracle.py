@@ -2,21 +2,28 @@
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same sf dir, then compares row count, column names, and
-order-insensitive values (columns sorted by name, rows sorted).
+order-insensitive values (columns sorted by name, rows sorted). Each
+query's frame is released after its collect (``operators.cache.release``);
+any persisted RDD (cache or localCheckpoint) the query left behind is a
+``LEAK <name>`` failure — except checkpoint blocks that no frame
+references any more, which the JVM ContextCleaner frees after a GC.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import gc
 import math
 import sys
+import time
 
 import duckdb
 
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod
+from automated_datastore_discovery_with_aws_glue_spark.operators.cache import release
 from automated_datastore_discovery_with_aws_glue_spark.session import get_spark
 from automated_datastore_discovery_with_aws_glue_spark.sources.readers import TESTDATA_TABLES
 
@@ -66,6 +73,26 @@ def _is_scalar_ts(v) -> bool:
     return isinstance(v, (datetime.date, datetime.datetime, datetime.time))
 
 
+def _persistent_rdd_ids(spark) -> set[int]:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _left_behind(spark, before: set[int]) -> set[int]:
+    """Persisted RDDs the query left behind. Checkpoint blocks whose
+    frames are all gone belong to the ContextCleaner, which frees them
+    once a GC finds the frames unreachable and it has worked through
+    its queue — so run GCs for a while before calling anything a leak
+    (a registered cache stays referenced, so a real leak never drains)."""
+    left = _persistent_rdd_ids(spark) - before
+    deadline = time.monotonic() + 30
+    while left and time.monotonic() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+        left = _persistent_rdd_ids(spark) - before
+    return left
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -86,12 +113,20 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        before = _persistent_rdd_ids(spark)
         try:
             sdf = fn(spark, sf_dir)
             s_cols = sdf.columns
             s_rows = [tuple(r) for r in sdf.collect()]
+            release(sdf)
+            del sdf
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
+            n_fail += 1
+            continue
+        leaked = _left_behind(spark, before)
+        if leaked:
+            print(f"LEAK {name}: {len(leaked)} persisted RDD(s) left after release")
             n_fail += 1
             continue
         sql = oracles.get(name)

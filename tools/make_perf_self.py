@@ -52,6 +52,7 @@ def main() -> None:
     prev = _minima(args.prev)
     now = _minima(args.now)
     touched = {q for q in args.touched.split(",") if q}
+    common = prev.keys() & now.keys()
 
     per_query = {}
     control_ratios = []
@@ -80,8 +81,10 @@ def main() -> None:
         "touched_median_ratio": (
             round(statistics.median(touched_ratios), 3) if touched_ratios else None
         ),
-        "total_prev_min": round(sum(v for v in prev.values()), 3),
-        "total_now_min": round(sum(v for v in now.values()), 3),
+        # totals over the queries timed in BOTH rounds: an added,
+        # removed or renamed query must not skew one side's sum
+        "total_prev_min": round(sum(prev[q] for q in common), 3),
+        "total_now_min": round(sum(now[q] for q in common), 3),
         "per_query": per_query,
     }
     path = f"PERF_SELF_r{args.round}.json"
